@@ -2,7 +2,9 @@ package graft.gold
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{
+  DataType, LongType, StringType, StructField, StructType
+}
 
 /** Minimal OWN commit log — the transactional kernel of a lakehouse table
   * format (Delta's `_delta_log`, Iceberg's snapshots), re-expressed over
@@ -1210,9 +1212,7 @@ object TxLog {
               "recorded schema (legacy log) - nothing to serve")
       }
     else alignToRecordedSchema(
-      readFilesWithDvs(spark, path, snap.files, snap.dvs,
-        columnMap = snap.columnMap, tombstones = snap.physTombstones,
-        explicitSchema = physicalReadSchema(snap)), snap)
+      readFilesWithDvs(spark, path, snap, snap.files), snap)
   }
 
   /** Null-fill columns the RECORDED schema declares but no data file
@@ -1419,33 +1419,51 @@ object TxLog {
   private def dvRowsDf(spark: SparkSession, path: String,
       active: Map[String, String]): DataFrame =
     active.groupBy(_._2).map { case (dvf, entries) =>
-      spark.read.parquet(s"$path/$dvf")
+      new TxLogFileIndex(spark, path, Seq(dvf), Map.empty,
+        knownBytes = Map(dvf -> sidecarFooter(path, dvf)._2))
+        .scan(DvRowsSchema)
         .filter(col("file").isInCollection(entries.keys.toSeq))
     }.reduce(_.unionAll(_))
       .select(col("file").as(DvFileCol), col("row_idx").as(DvRiCol))
+
+  /** Every DV sidecar's fixed shape ([[writeDvFile]] writes exactly these
+    * two columns): served explicitly, so a DV'd read pays no parquet
+    * schema-inference job per sidecar.
+    */
+  private val DvRowsSchema = StructType(Seq(
+    StructField("file", StringType), StructField("row_idx", LongType)))
+
+  /** The parquet scan of snapshot `snap`'s `files` (PHYSICAL column
+    * names) through one [[TxLogFileIndex]] — log-recorded sizes, no
+    * listing job, stats pruning on the pushed filters. It serves the
+    * recorded schema ([[physicalReadSchema]]); only a legacy log with no
+    * recorded schema, or a caller asking for `footerSchema` (the change
+    * feed's union-of-versions shape), reads the files' footer schema,
+    * all footers merged when `mergeSchema`.
+    */
+  private def scanFiles(spark: SparkSession, path: String, snap: Snapshot,
+      files: Seq[String], mergeSchema: Boolean,
+      footerSchema: Boolean): DataFrame = {
+    val index = new TxLogFileIndex(spark, path, files, snap.stats)
+    val recorded = if (footerSchema) None else physicalReadSchema(snap)
+    index.scan(recorded.getOrElse(index.inferSchema(mergeSchema)))
+  }
 
   /** Load `files` with (file_name, row_index) metadata columns attached —
     * the read-side anchor deletion vectors key on (parquet hidden
     * `_metadata`, per-file physical row position, stable under pushed
     * filters). `mergeSchema = false` for writer-internal probe/survivor
-    * reads (their historical contract: parquet's own type widening
+    * reads of legacy schema-less logs (parquet's own type widening
     * handles a widened re-declare, which footer MERGING refuses).
     */
   private def readFilesMeta(spark: SparkSession, path: String,
-      files: Seq[String], mergeSchema: Boolean = true,
-      columnMap: Map[String, String] = Map.empty,
-      tombstones: Set[String] = Set.empty,
-      explicitSchema: Option[StructType] = None): DataFrame = {
-    val reader = explicitSchema match {
-      case Some(sch) => spark.read.schema(sch)
-      case None => spark.read.option("mergeSchema", mergeSchema.toString)
-    }
+      snap: Snapshot, files: Seq[String], mergeSchema: Boolean = true,
+      footerSchema: Boolean = false): DataFrame =
     logicalizeRead(
-      reader.parquet(files.map(f => s"$path/$f"): _*)
+      scanFiles(spark, path, snap, files, mergeSchema, footerSchema)
         .withColumn(MetaFileCol, col("_metadata.file_name"))
         .withColumn(MetaRiCol, col("_metadata.row_index")),
-      columnMap, tombstones)
-  }
+      snap.columnMap, snap.physTombstones)
 
   /** Active-DV row-count ceiling for the broadcast-anti-join read path.
     * At or below it, DVs apply as a broadcast LeftAnti on (file_name,
@@ -1467,29 +1485,24 @@ object TxLog {
   private[graft] val dvBitmapMinRows =
     new java.util.concurrent.atomic.AtomicLong(1L << 17)
 
-  /** Driver-side cache of sidecar footer row counts (immutable files —
-    * cacheable forever). One footer read per sidecar lifetime, no job.
+  /** Driver-side cache of sidecar (footer row count, file bytes) —
+    * immutable files, so each entry is exact forever: one footer read per
+    * sidecar lifetime, no job. LRU-bounded: a session soft-deleting
+    * forever would otherwise keep one entry per sidecar EVER seen,
+    * including ones purge/compact/vacuum already shed (64k entries ≈ a
+    * few MB), while the live sidecars every read touches stay cached.
     */
-  private val sidecarRowsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private[graft] val sidecarFooters =
+    new graft.core.LruCache[String, (Long, Long)](65536)
 
-  private def sidecarRowCount(path: String, dvFile: String): Long = {
-    // size-capped (ADVICE r15): a session soft-deleting forever would
-    // otherwise accumulate one entry per sidecar EVER seen, including
-    // ones purge/compact/vacuum already shed. 64k entries ≈ a few MB;
-    // a full reset only costs re-reading live footers once.
-    if (sidecarRowsCache.size() > 65536) sidecarRowsCache.clear()
-    sidecarRowsCache.computeIfAbsent(s"$path/$dvFile", { key =>
-      val md = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-        new org.apache.hadoop.conf.Configuration(),
-        new org.apache.hadoop.fs.Path(key),
-        org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
-      val blocks = md.getBlocks
-      var i = 0; var n = 0L
-      while (i < blocks.size()) { n += blocks.get(i).getRowCount; i += 1 }
-      java.lang.Long.valueOf(n)
-    }).longValue()
-  }
+  private def sidecarFooter(path: String, dvFile: String): (Long, Long) =
+    sidecarFooters.getOrElseUpdate(s"$path/$dvFile", {
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$path/$dvFile"),
+        new org.apache.hadoop.conf.Configuration())
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try (reader.getRecordCount, in.getLength) finally reader.close()
+    })
 
   /** Upper bound on the active deleted-row count: the summed footer row
     * counts of the DISTINCT active sidecars (a sidecar may also carry
@@ -1498,7 +1511,7 @@ object TxLog {
     * zero Spark jobs.
     */
   private def activeDvRowCount(path: String, active: Map[String, String]): Long =
-    active.values.toSet.iterator.map(sidecarRowCount(path, _)).sum
+    active.values.toSet.iterator.map((d: String) => sidecarFooter(path, d)._1).sum
 
   /** Apply `active` deletion vectors to a meta-tagged frame (the
     * [[readFilesMeta]] shape — `__graft_file`/`__graft_ri` attached; both
@@ -1529,25 +1542,17 @@ object TxLog {
     * scale) — either way the table is never shuffled.
     */
   private def readFilesWithDvs(spark: SparkSession, path: String,
-      files: Seq[String], dvs: Map[String, String],
-      mergeSchema: Boolean = true,
-      columnMap: Map[String, String] = Map.empty,
-      tombstones: Set[String] = Set.empty,
-      explicitSchema: Option[StructType] = None): DataFrame = {
+      snap: Snapshot, files: Seq[String],
+      mergeSchema: Boolean = true): DataFrame = {
     val present = files.toSet
-    val active = dvs.filter { case (f, _) => present.contains(f) }
-    if (active.isEmpty) {
-      val reader = explicitSchema match {
-        case Some(sch) => spark.read.schema(sch)
-        case None => spark.read.option("mergeSchema", mergeSchema.toString)
-      }
+    val active = snap.dvs.filter { case (f, _) => present.contains(f) }
+    if (active.isEmpty)
       logicalizeRead(
-        reader.parquet(files.map(f => s"$path/$f"): _*),
-        columnMap, tombstones)
-    } else
+        scanFiles(spark, path, snap, files, mergeSchema, footerSchema = false),
+        snap.columnMap, snap.physTombstones)
+    else
       applyActiveDvs(spark, path,
-        readFilesMeta(spark, path, files, mergeSchema, columnMap, tombstones,
-          explicitSchema), active)
+        readFilesMeta(spark, path, snap, files, mergeSchema), active)
         .drop(MetaFileCol, MetaRiCol)
   }
 
@@ -1590,9 +1595,7 @@ object TxLog {
     val parts = Seq.newBuilder[DataFrame]
     (fromExclusive + 1 to to).foreach { v =>
       val (ps, nf, nd) = versionChangeParts(spark, path, v, files, dvs,
-        fs => readFilesMeta(spark, path, fs,
-          columnMap = endSnap.columnMap,
-          tombstones = endSnap.physTombstones))
+        fs => readFilesMeta(spark, path, endSnap, fs, footerSchema = true))
       parts ++= ps; files = nf; dvs = nd
     }
     val perVersion = parts.result()
@@ -1788,9 +1791,7 @@ object TxLog {
       val rec = parseRecord(path, w)
       val mayDelete = rec.remove.nonEmpty || rec.dvs.exists(_._2.isDefined)
       val (parts, nf, nd) = versionChangeParts(spark, path, w, files, dvs,
-        fs => readFilesMeta(spark, path, fs,
-          columnMap = endSnap.columnMap,
-          tombstones = endSnap.physTombstones))
+        fs => readFilesMeta(spark, path, endSnap, fs, footerSchema = true))
       files = nf; dvs = nd
       // each part is wholly one kind; split on the tag column
       val dels = parts.map(_.filter(col("_change_type") === "delete"))
@@ -2423,8 +2424,9 @@ object TxLog {
       col(c).as(columnMap.getOrElse(c, c))): _*)
 
   /** The recorded schema in PHYSICAL column names, all-nullable — the
-    * explicit read schema for WRITER-INTERNAL probe/survivor reads.
-    * Footer-schema reads are wrong there in both directions: merging
+    * explicit schema every snapshot read serves ([[scanFiles]]), user
+    * reads and WRITER-INTERNAL probe/survivor reads alike. Footer-schema
+    * reads are wrong there in both directions: merging
     * (mergeSchema=true) refuses int→long widened re-declares that
     * parquet type widening reads fine (round-12 gotcha), and
     * single-footer sampling (mergeSchema=false) silently DROPS columns
@@ -3050,8 +3052,7 @@ object TxLog {
     if (small.size < 2) return base
     // DV-aware materialization: a vectored small file compacts to its
     // LIVE rows and sheds its vector (compaction doubles as local purge)
-    val rows0 = readFilesWithDvs(spark, path, small, base.dvs,
-      columnMap = base.columnMap, tombstones = base.physTombstones)
+    val rows0 = readFilesWithDvs(spark, path, base, small)
     val rows =
       if (sortCols.isEmpty) rows0.coalesce(targetFiles)
       else rows0.repartitionByRange(targetFiles, sortCols.map(col): _*)
@@ -3364,11 +3365,8 @@ object TxLog {
     * DELETE/MERGE commit minutes-to-hours regardless of data volume.
     */
   private def touchedFileNames(spark: SparkSession, path: String,
-      candidates: Seq[String], probe: DataFrame => DataFrame,
-      dvs: Map[String, String] = Map.empty,
-      columnMap: Map[String, String] = Map.empty,
-      tombstones: Set[String] = Set.empty,
-      explicitSchema: Option[StructType] = None): Set[String] =
+      base: Snapshot, candidates: Seq[String],
+      probe: DataFrame => DataFrame): Set[String] =
     if (candidates.isEmpty) Set.empty
     else {
       // DV-aware: rows a deletion vector already killed must not mark a
@@ -3377,11 +3375,10 @@ object TxLog {
       // input_file_name() — the thread-local function refuses plans with
       // two file sources, which the DV anti-join introduces.
       val present = candidates.toSet
-      val active = dvs.filter { case (f, _) => present.contains(f) }
+      val active = base.dvs.filter { case (f, _) => present.contains(f) }
       val live = applyActiveDvs(spark, path,
-        readFilesMeta(spark, path, candidates, mergeSchema = false,
-          columnMap = columnMap, tombstones = tombstones,
-          explicitSchema = explicitSchema), active)
+        readFilesMeta(spark, path, base, candidates, mergeSchema = false),
+        active)
       probe(live).select(col(MetaFileCol)).distinct()
         .collect().map(_.getString(0)).toSet
     }
@@ -3419,7 +3416,7 @@ object TxLog {
     * canonical encoding only for integrals; [[statsPrunedFilesCanonical]]
     * takes canonical-unit bounds and prunes every LONG-DOMAIN stats type
     * (integral, DATE, TIMESTAMP_NTZ — string bounds live in
-    * strMin/strMax and are consumed only by `RewriteTxLogStatsScan`).
+    * strMin/strMax and are consumed only by [[TxLogFileIndex]]).
     * Sound by construction: files without stats (or with all-NULL
     * bounds) stay.
     */
@@ -3470,8 +3467,7 @@ object TxLog {
       case None => read(spark, path, asOf).filter(lit(false))
     }
     else alignToRecordedSchema(
-      readFilesWithDvs(spark, path, kept, snap.dvs,
-        columnMap = snap.columnMap, tombstones = snap.physTombstones), snap)
+      readFilesWithDvs(spark, path, snap, kept), snap)
   }
 
   /** [lo, hi] of integral column `c` over the (batch-scale) `keys` frame,
@@ -3516,9 +3512,8 @@ object TxLog {
           else logPruned
         case None => base.files
       }
-    val touched = touchedFileNames(spark, path, candidates,
-      _.join(k, nk, "left_semi"), base.dvs, base.columnMap,
-      base.physTombstones, physicalReadSchema(base))
+    val touched = touchedFileNames(spark, path, base, candidates,
+      _.join(k, nk, "left_semi"))
     val untouched = base.files.filterNot(touched.contains)
     val schema = mergeSchemas(base.schema, newData.schema)
     enforceConstraints(newData, schema, base.constraints)
@@ -3528,10 +3523,8 @@ object TxLog {
       if (touched.isEmpty) (Nil, Map.empty[String, FileStats])
       else {
         val survivors =
-          readFilesWithDvs(spark, path, touched.toSeq, base.dvs,
-            mergeSchema = false, columnMap = base.columnMap,
-            tombstones = base.physTombstones,
-            explicitSchema = physicalReadSchema(base))
+          readFilesWithDvs(spark, path, base, touched.toSeq,
+            mergeSchema = false)
             .join(k, nk, "left_anti")
         if (survivors.isEmpty) (Nil, Map.empty[String, FileStats])
         else writeDataFiles(survivors, path, base.partitionCols, cmap)
@@ -3581,9 +3574,8 @@ object TxLog {
           c, lo, hi)
       case None => base.files
     }
-    val touched = touchedFileNames(spark, path, candidates, _.filter(cond),
-      base.dvs, base.columnMap, base.physTombstones,
-      physicalReadSchema(base))
+    val touched = touchedFileNames(spark, path, base, candidates,
+      _.filter(cond))
     val untouched = base.files.filterNot(touched.contains)
     val (rewritten, rewrittenStats) =
       if (touched.isEmpty) (Nil, Map.empty[String, FileStats])
@@ -3594,10 +3586,8 @@ object TxLog {
         // survived); coalesce makes survival explicit. DV-aware read:
         // soft-deleted rows must not resurrect into the rewrite.
         val survivors =
-          readFilesWithDvs(spark, path, touched.toSeq, base.dvs,
-            mergeSchema = false, columnMap = base.columnMap,
-            tombstones = base.physTombstones,
-            explicitSchema = physicalReadSchema(base))
+          readFilesWithDvs(spark, path, base, touched.toSeq,
+            mergeSchema = false)
             .filter(!coalesce(cond, lit(false)))
         if (survivors.isEmpty) (Nil, Map.empty[String, FileStats])
         else writeDataFiles(survivors, path, base.partitionCols,
@@ -3639,12 +3629,10 @@ object TxLog {
     * reads. Trade-offs, matching Delta's: per-file stats become UPPER
     * bounds (pruning stays sound — deletes only shrink), the read adds a
     * broadcast anti-join until [[purgeDeletes]] or a rewriting commit
-    * materializes, and the log-stats optimizer rule MAY not fire on
-    * DV'd tables (the user filter sits above the DV anti-join unless
-    * pushdown restores the Filter-over-scan shape; when it does fire,
-    * pruning the data side of the anti-join is sound — it only drops
-    * rows the filter would drop). Predicate NULL semantics match SQL
-    * DELETE: NULL never deletes.
+    * materializes, and stats pruning ([[TxLogFileIndex]]) sees only
+    * the filters pushdown moves below the DV anti-join (pruning the data
+    * side there is sound — it only drops rows the filter would drop).
+    * Predicate NULL semantics match SQL DELETE: NULL never deletes.
     */
   def deleteWhereDV(spark: SparkSession, path: String,
       cond: Column, expectedVersion: Long,
@@ -3657,9 +3645,7 @@ object TxLog {
         val active = base.dvs.filter { case (f, _) =>
           present.contains(f) }
         val live = applyActiveDvs(spark, path,
-          readFilesMeta(spark, path, base.files,
-            columnMap = base.columnMap, tombstones = base.physTombstones),
-          active)
+          readFilesMeta(spark, path, base, base.files), active)
         Some(live.filter(coalesce(cond, lit(false)))
           .select(col(MetaFileCol).as("file"), col(MetaRiCol).as("row_idx"))
           .persist())
@@ -3764,8 +3750,7 @@ object TxLog {
     val base = snapshot(path, Some(expectedVersion))
     val dvd = base.files.filter(base.dvs.contains).sorted
     if (dvd.isEmpty) return base
-    val survivors = readFilesWithDvs(spark, path, dvd, base.dvs,
-      columnMap = base.columnMap, tombstones = base.physTombstones)
+    val survivors = readFilesWithDvs(spark, path, base, dvd)
     val (rewritten, rewrittenStats) =
       if (survivors.isEmpty) (Nil, Map.empty[String, FileStats])
       else writeDataFiles(survivors, path, base.partitionCols,
@@ -3850,8 +3835,7 @@ object TxLog {
     val present = base.files.toSet
     val active = base.dvs.filter { case (f, _) => present.contains(f) }
     applyActiveDvs(spark, path,
-      readFilesMeta(spark, path, base.files,
-        columnMap = base.columnMap, tombstones = base.physTombstones), active)
+      readFilesMeta(spark, path, base, base.files), active)
   }
 
   /** UPDATE by deletion vector — row-level mutation WITHOUT file rewrites
@@ -4323,8 +4307,7 @@ object TxLog {
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         snap.schema.get)
     else alignToRecordedSchema(
-      readFilesWithDvs(spark, path, matching, snap.dvs,
-        columnMap = snap.columnMap, tombstones = snap.physTombstones), snap)
+      readFilesWithDvs(spark, path, snap, matching), snap)
   }
 
   /** DELETE whole partitions METADATA-ONLY (the Delta fast path for a

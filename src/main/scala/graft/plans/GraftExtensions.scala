@@ -283,10 +283,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => RewriteIntersectSize)
     e.injectOptimizerRule(_ => RewriteRangeJoin)
     e.injectOptimizerRule(_ => RewriteSkipIndexScan)
-    e.injectOptimizerRule(_ => RewriteTxLogStatsScan)
-    // before the stats rule in spirit (same fixpoint batch): expands the
-    // graft-txlog DV placeholder into the native anti-join plan, whose
-    // data-side Filter-over-scan shape the stats rule then prunes
+    // expands the graft-txlog DV placeholder into the native anti-join
+    // plan, whose data-side scan gold.TxLogFileIndex prunes by log stats
     e.injectOptimizerRule(_ => ExpandTxLogDvScan)
     // SQL row-level DML + ALTER TABLE over catalog TxLog tables: a
     // post-hoc resolution rule (DELETE/UPDATE/MERGE analyze cleanly over

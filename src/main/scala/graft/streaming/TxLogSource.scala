@@ -474,7 +474,8 @@ object TxLogSource {
     TxLogRelation.asNullableSchema(snap.schema.getOrElse {
       require(snap.files.nonEmpty,
         s"graft-txlog source: $path has no recorded schema and no files")
-      spark.read.parquet(snap.files.map(f => s"$path/$f"): _*).schema
+      new graft.gold.TxLogFileIndex(spark, path, snap.files, snap.stats)
+        .inferSchema(merge = false)
     })
   }
 }

@@ -1,41 +1,57 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 import graft.gold.TxLog
-import graft.plans.RewriteTxLogStatsScan
 
-/** The log-native auto-skipping rule's contract: (1) an ordinary
+/** The log-native auto-skipping contract of `gold.TxLogFileIndex`, the
+  * file index every TxLog scan plans onto: (1) an ordinary
   * `TxLog.read(...).filter(...)` scan reads strictly fewer files with
-  * ZERO extra jobs; (2) pruning is SOUND across predicate shapes in BOTH
-  * stat domains — canonical longs and truncated string bounds (UTF8
-  * binary order, incl. the supplementary-plane boundary where UTF-16
-  * order would mis-prune); (3) the stats are TRANSACTIONALLY CONSISTENT
-  * — a delete/rewrite immediately yields the new version's pruning
-  * (version keyed cache, no staleness window), and a time-travel scan of
-  * since-removed files keeps them (unknown files never pruned); (4) the
-  * conf is loud on misconfiguration and scoped per session.
+  * ZERO extra jobs and no session conf; (2) pruning is SOUND across
+  * predicate shapes in BOTH stat domains — canonical longs and truncated
+  * string bounds (UTF8 binary order, incl. the supplementary-plane
+  * boundary where UTF-16 order would mis-prune); (3) the stats are
+  * TRANSACTIONALLY CONSISTENT — a delete/rewrite immediately yields the
+  * new version's pruning (no staleness window), and a time-travel scan
+  * prunes by the old version's own stats, exactly.
   */
 class TxLogStatsRuleSpec extends SparkSpecBase {
   import spark.implicits._
 
-  private def scanFileCounts(df: DataFrame): Seq[Int] = {
-    df.collect() // force final (AQE-resolved) plan
-    df.queryExecution.executedPlan.collect {
-      case f: FileSourceScanExec => f.relation.location.inputFiles.length
-    }.toSeq
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** "number of files read" of every parquet scan that reads a column
+    * named `c` (the data scans — DV sidecar scans carry file/row_idx).
+    */
+  private def scanFileCounts(df: DataFrame, c: String = "k"): Seq[Long] = {
+    df.collect() // force the final (AQE-resolved) plan and its metrics
+    val counts = Plans.collect(df.queryExecution.executedPlan) {
+      case f: FileSourceScanExec if f.output.exists(_.name == c) =>
+        f.metrics("numFiles").value
+    }
+    counts should not be empty
+    counts
   }
+
+  /** `pred` evaluated over the table's rows WITHOUT any file index: the
+    * full read collected and re-served from a local relation — the
+    * oracle every pruned scan must match.
+    */
+  private def unpruned(path: String, pred: DataFrame => DataFrame): Array[String] = {
+    val full = TxLog.read(spark, path)
+    val local = spark.createDataFrame(
+      java.util.Arrays.asList(full.collect(): _*), full.schema)
+    pred(local).collect().map(_.mkString("|")).sorted
+  }
+
+  private def rows(df: DataFrame): Array[String] =
+    df.collect().map((r: Row) => r.mkString("|")).sorted
 
   private def freshPath(): String =
     java.nio.file.Files.createTempDirectory("txstats").toString + "/t"
-
-  private def armed(): org.apache.spark.sql.SparkSession = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", 4)
-    s
-  }
 
   test("TxLog.read scans auto-prune through log stats and stay oracle-identical") {
     val path = freshPath()
@@ -49,8 +65,6 @@ class TxLogStatsRuleSpec extends SparkSpecBase {
       path)
     val total = TxLog.snapshot(path).files.size
     total shouldBe 8
-    val s = armed()
-    s.conf.set(RewriteTxLogStatsScan.PathKey, path)
 
     val predicates: Seq[(DataFrame => DataFrame, Boolean)] = Seq(
       ((d: DataFrame) => d.filter(col("k") >= 100L && col("k") <= 199L), true),
@@ -66,30 +80,28 @@ class TxLogStatsRuleSpec extends SparkSpecBase {
       // (payload "r$i" boxes are lexically disjoint enough here)
       ((d: DataFrame) => d.filter(col("payload") === "r5"), true)
     )
+    // every session ALWAYS prunes: no conf names the table
     for (((pred, expectPrune), i) <- predicates.zipWithIndex) {
-      val pruned = pred(TxLog.read(s, path))
-      val full = pred(TxLog.read(spark, path)) // unarmed parent session
+      val pruned = pred(TxLog.read(spark, path))
       withClue(s"predicate #$i: ") {
-        pruned.collect().map(_.toSeq).sortBy(_.mkString("|")) shouldBe
-          full.collect().map(_.toSeq).sortBy(_.mkString("|"))
+        rows(pruned) shouldBe unpruned(path, pred)
         val counts = scanFileCounts(pruned)
-        if (expectPrune) counts.foreach(_ should be < total)
-        else counts.foreach(_ shouldBe total)
-        scanFileCounts(full).foreach(_ shouldBe total)
+        if (expectPrune) counts.foreach(_ should be < total.toLong)
+        else counts.foreach(_ shouldBe total.toLong)
       }
     }
+    // the unfiltered read lists every file: the counts above are real
+    scanFileCounts(TxLog.read(spark, path)).foreach(_ shouldBe total.toLong)
     // TIMESTAMP_NTZ bound (Catalyst micros == log canonical micros)
-    val ntz = TxLog.read(s, path)
-      .filter(col("ts") < lit("2020-01-15 00:00:00").cast("timestamp_ntz"))
-    ntz.select(count(lit(1))).as[Long].head() shouldBe
-      TxLog.read(spark, path)
-        .filter(col("ts") < lit("2020-01-15 00:00:00").cast("timestamp_ntz"))
-        .select(count(lit(1))).as[Long].head()
-    scanFileCounts(ntz).foreach(_ should be < total)
+    val ntzPred = (d: DataFrame) =>
+      d.filter(col("ts") < lit("2020-01-15 00:00:00").cast("timestamp_ntz"))
+    val ntz = ntzPred(TxLog.read(spark, path))
+    rows(ntz) shouldBe unpruned(path, ntzPred)
+    scanFileCounts(ntz).foreach(_ should be < total.toLong)
     // an impossible interval prunes to zero files, result empty
-    val none = TxLog.read(s, path).filter(col("k") > 5000L)
+    val none = TxLog.read(spark, path).filter(col("k") > 5000L)
     none.collect() shouldBe empty
-    scanFileCounts(none).foreach(_ shouldBe 0)
+    scanFileCounts(none).foreach(_ shouldBe 0L)
   }
 
   test("string stats: truncated bounds stay sound on long values and prune; UTF8 order on supplementary planes") {
@@ -113,13 +125,11 @@ class TxLogStatsRuleSpec extends SparkSpecBase {
       mx.codePointCount(0, mx.length) shouldBe 32
       mx.last shouldBe 'y' // the incremented trailing 'x' of the prefix
     }
-    val s = armed()
-    s.conf.set(RewriteTxLogStatsScan.PathKey, path)
-    val pruned = TxLog.read(s, path).filter(col("s") >= "b" && col("s") < "c")
-    val full = TxLog.read(spark, path).filter(col("s") >= "b" && col("s") < "c")
-    pruned.select("k").as[Long].collect().sorted shouldBe
-      full.select("k").as[Long].collect().sorted
-    scanFileCounts(pruned).foreach(_ should be < 4)
+    val range = (d: DataFrame) => d.filter(col("s") >= "b" && col("s") < "c")
+    val pruned = range(TxLog.read(spark, path))
+    rows(pruned) shouldBe unpruned(path, range)
+    pruned.select("k").as[Long].collect().sorted shouldBe (25L until 50L).toArray
+    scanFileCounts(pruned).foreach(_ should be < 4L)
 
     // supplementary-plane boundary: U+FFFF sorts BELOW U+1F600 in UTF8 /
     // code-point order but ABOVE it in java.lang.String UTF-16 order — a
@@ -131,9 +141,7 @@ class TxLogStatsRuleSpec extends SparkSpecBase {
         (3L, new String(Character.toChars(0x1F600))))
         .toDF("k", "s").repartitionByRange(2, col("s")),
       path2)
-    val s2 = armed()
-    s2.conf.set(RewriteTxLogStatsScan.PathKey, path2)
-    TxLog.read(s2, path2).filter(col("s") >= lit("\uFFFF"))
+    TxLog.read(spark, path2).filter(col("s") >= lit("\uFFFF"))
       .select("k").as[Long].collect().sorted shouldBe Array(2L, 3L)
   }
 
@@ -141,46 +149,22 @@ class TxLogStatsRuleSpec extends SparkSpecBase {
     val path = freshPath()
     TxLog.init((0 until 800).map(i => (i.toLong, s"r$i")).toDF("k", "payload")
       .repartitionByRange(8, col("k")), path)
-    val s = armed()
-    s.conf.set(RewriteTxLogStatsScan.PathKey, path)
-    scanFileCounts(TxLog.read(s, path).filter(col("k") <= 99L))
-      .foreach(_ should be < 8)
+    scanFileCounts(TxLog.read(spark, path).filter(col("k") <= 99L))
+      .foreach(_ should be < 8L)
     // delete the low range: its file leaves; pruning must follow the new
     // version at once (stats ride in the commit — no staleness window)
-    TxLog.deleteWhere(s, path, col("k") <= 99L, 0L)
-    val after = TxLog.read(s, path).filter(col("k") <= 150L)
+    TxLog.deleteWhere(spark, path, col("k") <= 99L, 0L)
+    val after = TxLog.read(spark, path).filter(col("k") <= 150L)
     after.select(sum(col("k"))).as[Long].head() shouldBe (100L to 150L).sum
-    scanFileCounts(after).foreach(_ shouldBe 1)
-    // time travel BELOW the delete: the removed file is unknown to the
-    // current stats map → kept, and the result is still exact
-    val tt = TxLog.read(s, path, asOf = Some(0L)).filter(col("k") <= 150L)
+    scanFileCounts(after).foreach(_ shouldBe 1L)
+    // time travel BELOW the delete: the removed file is pruned (or kept)
+    // by version 0's OWN stats, and the result is exact
+    val tt = TxLog.read(spark, path, asOf = Some(0L)).filter(col("k") <= 150L)
     tt.select(sum(col("k"))).as[Long].head() shouldBe (0L to 150L).sum
-  }
-
-  test("conf pointing at a non-table raises a named error; other scans and sessions unaffected") {
-    val path = freshPath()
-    TxLog.init((0 until 10).map(i => (i.toLong, s"r$i")).toDF("k", "payload"),
-      path)
-    val bad = path + "_nope" // plain parquet dir, NO commit log
-    (0 until 5).map(i => (i.toLong, "x")).toDF("k", "p")
-      .write.mode("overwrite").parquet(bad)
-    val s = armed()
-    s.conf.set(RewriteTxLogStatsScan.PathKey, bad)
-    // a scan whose files live elsewhere never fires the rule: no error
-    TxLog.read(s, path).filter(col("k") === 1L).collect() should have size 1
-    // a FILE-LIST scan under the misconfigured dir fires it → loud error
-    val parts = new java.io.File(bad).listFiles()
-      .filter(_.getName.startsWith("part-")).map(_.getPath)
-    parts should not be empty
-    val e = intercept[Exception] {
-      s.read.parquet(parts.toIndexedSeq: _*).filter(col("k") === 1L).collect()
-    }
-    val chain = Iterator.iterate(e: Throwable)(_.getCause)
-      .takeWhile(_ != null).toSeq
-    chain.exists(c => c.getMessage != null &&
-      c.getMessage.contains(RewriteTxLogStatsScan.PathKey)) shouldBe true
-    // the unarmed parent session is untouched by the misconfiguration
-    TxLog.read(spark, path).count() shouldBe 10L
+    val v0Below = TxLog.snapshot(path, Some(0L)).stats.values
+      .count(_.cols("k").min.exists(_ <= 150L))
+    v0Below should be < 8
+    scanFileCounts(tt).foreach(_ shouldBe v0Below.toLong)
   }
 
   test("stats pruning COMPOSES with deletion vectors: pushdown restores the eligible shape below the anti-join") {
@@ -191,43 +175,18 @@ class TxLogStatsRuleSpec extends SparkSpecBase {
       path)
     TxLog.deleteWhereDV(spark, path, col("k") % 10 === 3, 0L)
     val total = TxLog.snapshot(path).files.size
-    val s = armed()
-    s.conf.set(RewriteTxLogStatsScan.PathKey, path)
-    // AQE wraps the join sides in QueryStageExec LEAVES, hiding the scans
-    // from plan.collect — turn it off so the file-count assertions can
-    // see them (the rule itself is AQE-independent: it runs at logical
-    // optimization, before any physical planning)
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    val u = spark.newSession()
-    u.conf.set("spark.sql.shuffle.partitions", 4)
-    u.conf.set("spark.sql.adaptive.enabled", "false")
-    val pruned = TxLog.read(s, path).filter(col("k") >= 100L && col("k") <= 199L)
-    val full = TxLog.read(u, path).filter(col("k") >= 100L && col("k") <= 199L)
-    // soundness first: identical rows (DVs applied AND files pruned)
-    pruned.select("k").as[Long].collect().sorted shouldBe
-      full.select("k").as[Long].collect().sorted
+    val pruned = TxLog.read(spark, path).filter(col("k") >= 100L && col("k") <= 199L)
+    // soundness first: DVs applied AND files pruned
     pruned.select("k").as[Long].collect().sorted shouldBe
       (100L to 199L).filterNot(_ % 10 == 3).toArray
     // the plan keeps the DV anti-join AND the DATA-side scan reads fewer
     // files — the user filter was pushed below the LeftAnti join onto
-    // the parquet relation, where the rule fired (identify the data scan
-    // by its `k` column; the other scan is the metadata-scale DV sidecar)
-    pruned.collect()
-    val plan = pruned.queryExecution.executedPlan
-    plan.toString should include("LeftAnti")
-    val dataScans = plan.collect {
-      case f: FileSourceScanExec
-          if f.output.exists(_.name == "k") &&
-            f.relation.location.rootPaths.exists(_.getName.startsWith("part-")) =>
-        f.relation.location.inputFiles.length
-    }
-    dataScans should not be empty
-    dataScans.foreach(_ should be < total)
-    // unarmed session: same rows, full scan
-    full.collect()
-    full.queryExecution.executedPlan.collect {
-      case f: FileSourceScanExec if f.output.exists(_.name == "k") =>
-        f.relation.location.inputFiles.length
-    }.foreach(_ shouldBe total)
+    // the parquet scan, where the file index pruned by log stats
+    // (identify the data scan by its `k` column; the other scan is the
+    // metadata-scale DV sidecar)
+    pruned.queryExecution.executedPlan.toString should include("LeftAnti")
+    scanFileCounts(pruned).foreach(_ should be < total.toLong)
+    // the same read unfiltered scans every file
+    scanFileCounts(TxLog.read(spark, path)).foreach(_ shouldBe total.toLong)
   }
 }
